@@ -591,45 +591,78 @@ object Dedup {
       |ORDER BY id_a""".stripMargin
 
   // ---------------------------------------------------------------
-  /** Exact self-1NN over an embedding table WITHOUT broadcasting the
-    * corpus: a fragment-and-replicate block grid. The corpus is hashed
-    * into `blocks` fragments; every query row is replicated once per
-    * fragment (explode — no join, no broadcast) and equi-joins its
-    * fragment. Each task therefore holds ONE fragment (N/B vectors) of
-    * build side — memory is bounded by choosing B — and the N²/B pair
-    * stream per task collapses through the partial `graft_topk`
-    * aggregate before anything shuffles. Total shuffle: N·B probe rows
-    * + N corpus rows + ≤ tasks×1 partial top-1 rows; never N² rows and
-    * never a full-corpus broadcast (the round-1 version died on both).
+  /** Exact self-1NN over an embedding table as a tiled in-task kernel,
+    * without broadcasting the corpus.
+    *
+    * Tile shape. The corpus is hashed into `blocks` blocks by
+    * `pmod(xxhash64(vec_id), b)`, one row per block holding its ids
+    * and vectors as arrays. The query side is the same block rows
+    * replicated b times (explode over the corpus block numbers), and
+    * an equi-join on the corpus block pairs every query block with
+    * every corpus block: b² tiles, each one row holding both blocks.
+    * The join is a shuffled hash join by hint, so the corpus is never
+    * broadcast and never meets a nested-loop join, at any size.
+    * Shuffle: N vectors into the blocks, b² block rows (b·N vectors)
+    * into the tiles, at most b·N one-row candidates into the merge;
+    * never N² rows.
+    *
+    * Kernel. A task unpacks each tile into primitive arrays and runs
+    * [[NearestTile.nearest]]: norms once per vector rather than per
+    * pair, one sequential double fold per dot product, the best
+    * neighbour per query by (score desc, id asc) under
+    * [[graft.functions.ScoreOrder]], self skipped. The folds are
+    * `graft_cosine`'s op for op, so every cosine is bit-identical to it
+    * and the DuckDB oracle hash holds.
+    * Each tile emits at most one row per query into the
+    * `graft_topk(cos, nn_id, 1)` merge, whose total order makes the
+    * result independent of tiling and partitioning.
+    *
+    * Task count. Nearly all the work is in the tiles, but their input
+    * is small (about b·N vectors), so adaptive execution would coalesce
+    * a by-bytes shuffle into one or two tasks and run every pair on one
+    * core. Instead rows are placed by partition id: corpus block c and
+    * its b tiles go to task `c % p`, for p = min(b, slots) tasks that
+    * adaptive execution leaves alone. The tile stage's width follows
+    * the tiles and the session's slots, not the shuffle's bytes.
+    * Replicating block rows rather than single vectors keeps the
+    * replicated side at b² rows.
     *
     * Exact kNN is inherently N² compute — the *approximate* scale path
-    * is [[embeddingAnn]] — but this is the shape that lets the exact
-    * variant run as far as compute allows on a 1000-executor cluster.
-    *
-    * Returns (vec_id, nn_id, cos) with DuckDB-matching tie-breaking
-    * (score desc, id asc — guaranteed by the TopK buffer's total
-    * order, independent of partitioning).
+    * is [[embeddingAnn]]. Returns (vec_id, nn_id, cos); rows with a
+    * null id or a null embedding take no part.
     */
   def exactSelf1nn(s: SparkSession, e: DataFrame, blocks: Int = -1): DataFrame = {
     GraftFunctions.register(s)
-    // the equi-join distributes work by blk, so the number of DISTINCT
-    // blk values caps the usable parallelism: 8 blocks on a 32-slot
-    // session leaves 3/4 of the cluster idle while each task grinds
-    // N²/8 cosine evals (measured 4× wall-clock at sf1). Default to
-    // 2× the session's shuffle partitions — every slot gets ~2 blocks,
-    // probe replication stays N·B rows (tiny next to the N² evals).
+    import s.implicits._
+    // 2× the shuffle partitions: at least as many blocks as slots in the
+    // usual setting, so every slot gets a share of the corpus blocks
     val b = if (blocks > 0) blocks
       else math.max(8, s.sessionState.conf.numShufflePartitions * 2)
-    val corpus = e.select(
-      pmod(xxhash64(col("vec_id")), lit(b)).as("blk"),
-      col("vec_id"), col("embedding"))
-    val probes = e.select(
-      explode(sequence(lit(0L), lit((b - 1).toLong))).as("blk"),
-      col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probes.join(corpus, Seq("blk"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("nn_id"),
-        expr("graft_cosine(q_emb, embedding)").as("cos"))
+    val p = math.min(b, s.sparkContext.defaultParallelism)
+    def task(blk: Column): Column = pmod(blk, lit(p)).cast("int")
+    // one row per corpus block, grouped on the task that joins it. The
+    // join would infer the not-null filters below and push them under
+    // the corpus side only; stated here, both sides share one scan and
+    // one shuffle of the vectors
+    val blockRows = e.filter(col("vec_id").isNotNull && col("embedding").isNotNull)
+      .select(pmod(xxhash64(col("vec_id")), lit(b)).as("blk"), col("vec_id"), col("embedding"))
+      .select(task(col("blk")).as("task"), col("*"))
+      .filter(col("blk").isNotNull && col("task").isNotNull)
+      .repartitionById(p, col("task"))
+      .groupBy("task", "blk")
+      .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("vs"))
+    val corpus = blockRows.select(col("task"), col("blk").as("cblk"),
+      col("vs.vec_id").as("c_ids"), col("vs.embedding").as("c_vecs"))
+    val queries = blockRows
+      .select(explode(sequence(lit(0L), lit(b - 1L))).as("cblk"),
+        col("vs.vec_id").as("q_ids"), col("vs.embedding").as("q_vecs"))
+      .withColumn("task", task(col("cblk")))
+      .repartitionById(p, col("task"))
+    queries.join(corpus.hint("shuffle_hash"), Seq("task", "cblk"))
+      .select("q_ids", "q_vecs", "c_ids", "c_vecs")
+      .as[(Array[Long], Array[Array[Float]], Array[Long], Array[Array[Float]])]
+      .flatMap { case (qi, qv, ci, cv) => NearestTile.nearest(qi, qv, ci, cv) }
+      .toDF("q_id", "nn_id", "cos")
       .groupBy("q_id")
       .agg(expr("graft_topk(cos, nn_id, 1)").as("top"))
       .select(col("q_id").as("vec_id"), col("top")(0).getField("id").as("nn_id"),
@@ -638,7 +671,7 @@ object Dedup {
 
   /** Embedding near-dup: each vector's exact nearest neighbor by
     * cosine, flagged against a threshold. Pair generation is the
-    * block-grid [[exactSelf1nn]] (no corpus broadcast, no
+    * tiled [[exactSelf1nn]] (no corpus broadcast, no
     * BroadcastNestedLoopJoin — pinned in PlanShapeSpec). DuckDB oracle
     * recomputes the cosine with the same sequential double fold.
     */
@@ -840,7 +873,7 @@ object Dedup {
   def ccClusters(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
-    // 1-NN graph via the block-grid exact kNN — no corpus broadcast
+    // 1-NN graph via the tiled exact kNN — no corpus broadcast
     val pairs = exactSelf1nn(s, e)
       .select(col("vec_id").as("src"), col("nn_id").as("dst"))
     val labels = ConnectedComponents.run(

@@ -8,30 +8,48 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Bounded top-k buffer: keeps the k best (score desc, id asc) pairs.
-  * O(k) memory regardless of input size.
+/** The one ranking order of every top-k here: score descending, then
+  * the key ascending. Scores compare by `java.lang.Double.compare`, a
+  * total order, so NaN (what `graft_cosine` gives for a zero vector)
+  * ranks first, as in DuckDB's `ORDER BY … DESC`, and the kept set
+  * never depends on insertion order. The kernel of
+  * [[graft.dedup.Dedup.exactSelf1nn]] ranks by [[before]] as well.
   */
-final class TopKBuffer(val k: Int) {
-  // min-heap on "goodness" so the worst kept element is at the root
-  private[functions] val heap =
-    scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-      // reverse of (score desc, id asc): head = worst kept
-      Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) })
+object ScoreOrder {
+  /** Negative when score s ranks before score t. */
+  def compareScores(s: Double, t: Double): Int = java.lang.Double.compare(t, s)
 
-  private def worseThanHead(s: Double, id: Long): Boolean = {
-    val (hs, hid) = heap.head
-    s < hs || (s == hs && id > hid)
+  /** Whether (s, id) ranks strictly before (t, jd). */
+  def before(s: Double, id: Long, t: Double, jd: Long): Boolean = {
+    val c = compareScores(s, t)
+    c < 0 || (c == 0 && id < jd)
   }
 
-  def add(s: Double, id: Long): Unit = {
-    if (heap.size < k) heap.enqueue((s, id))
-    else if (!worseThanHead(s, id)) { heap.dequeue(); heap.enqueue((s, id)) }
+  /** Best first; a max-heap on it keeps the worst kept pair at its head. */
+  def best[K](implicit key: Ordering[K]): Ordering[(Double, K)] = (x, y) => {
+    val c = compareScores(x._1, y._1)
+    if (c != 0) c else key.compare(x._2, y._2)
   }
-
-  /** Best-first (score desc, id asc). */
-  def sorted: Array[(Double, Long)] =
-    heap.toArray.sortBy { case (s, id) => (-s, id) }
 }
+
+/** Bounded buffer of the k best (score, key) pairs under
+  * [[ScoreOrder]]. O(k) memory regardless of input size.
+  */
+sealed class TopKOf[K: Ordering](val k: Int) {
+  private val order = ScoreOrder.best[K]
+  private[functions] val heap = scala.collection.mutable.PriorityQueue.empty[(Double, K)](order)
+
+  def add(s: Double, key: K): Unit = {
+    if (heap.size < k) heap.enqueue((s, key))
+    else if (order.lt((s, key), heap.head)) { heap.dequeue(); heap.enqueue((s, key)) }
+  }
+
+  /** Best-first. */
+  def sorted: Array[(Double, K)] = heap.toArray.sorted(order)
+}
+
+/** Top-k (score desc, id asc) pairs with LONG ids. */
+final class TopKBuffer(k: Int) extends TopKOf[Long](k)
 
 /** Aggregate `graft_topk(score, id, k)` → `array<struct<score,id>>`
   * sorted best-first.
@@ -104,29 +122,8 @@ case class TopKByScore(
     copy(score = cs(0), id = cs(1))
 }
 
-/** Bounded top-k buffer with STRING payloads: k best (score desc,
-  * tag asc) pairs, O(k) memory.
-  */
-final class TopKStrBuffer(val k: Int) {
-  private[functions] val heap =
-    scala.collection.mutable.PriorityQueue.empty[(Double, String)](
-      Ordering.by[(Double, String), (Double, String)] { case (s, t) => (-s, t) }(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String)))
-
-  private def worseThanHead(s: Double, t: String): Boolean = {
-    val (hs, ht) = heap.head
-    s < hs || (s == hs && t > ht)
-  }
-
-  def add(s: Double, t: String): Unit = {
-    if (heap.size < k) heap.enqueue((s, t))
-    else if (!worseThanHead(s, t)) { heap.dequeue(); heap.enqueue((s, t)) }
-  }
-
-  def sorted: Array[(Double, String)] =
-    heap.toArray.sortBy { case (s, t) => (-s, t) }(
-      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
-}
+/** Top-k (score desc, tag asc) pairs with STRING payloads. */
+final class TopKStrBuffer(k: Int) extends TopKOf[String](k)
 
 /** Aggregate `graft_topk_str(score, tag, k)` →
   * `array<struct<score,tag>>` best-first: heavy-hitters / top-terms

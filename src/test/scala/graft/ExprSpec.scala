@@ -117,6 +117,24 @@ class ExprSpec extends SparkSpec {
     assert(run(7) === expected, "merge order must not change the result")
   }
 
+  test("topk: every insertion order keeps the same k, NaN first, ties by key") {
+    import graft.functions.{TopKBuffer, TopKStrBuffer}
+    val nan = Double.NaN
+    val scored = Seq((nan, 5L), (0.9, 3L), (0.9, 1L), (nan, 2L), (0.5, 4L), (Double.PositiveInfinity, 6L))
+    val best = Seq((nan, 2L), (nan, 5L), (Double.PositiveInfinity, 6L), (0.9, 1L), (0.9, 3L), (0.5, 4L))
+    def bits[K](xs: Seq[(Double, K)]) = xs.map { case (s, t) => (java.lang.Double.doubleToLongBits(s), t) }
+    (1 to scored.size).foreach { k =>
+      scored.permutations.foreach { order =>
+        val ids = new TopKBuffer(k)
+        order.foreach { case (s, id) => ids.add(s, id) }
+        assert(bits(ids.sorted.toSeq) === bits(best.take(k)), s"k=$k order=$order")
+        val tags = new TopKStrBuffer(k)
+        order.foreach { case (s, id) => tags.add(s, id.toString) }
+        assert(bits(tags.sorted.toSeq) === bits(best.take(k).map { case (s, id) => (s, id.toString) }))
+      }
+    }
+  }
+
   test("aspectFit: box on the long side, floor on the short, never zero") {
     import graft.multimodal.Multimodal.aspectFit
     assert(aspectFit(640, 480, 224) === ((224L, 168L))) // landscape

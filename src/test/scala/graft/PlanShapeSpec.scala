@@ -96,7 +96,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(!p.contains("BroadcastExchange"),
         s"at scale must shuffle, not broadcast:\n${p.take(2000)}")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        "pair generation must be a shuffle equi-join on blk")
+        "tile generation must be a shuffle equi-join on the corpus block")
       assert(p.contains("partial_graft_topk"),
         "needs map-side partial top-k before the exchange")
       // cc_clusters checkpoints the 1-NN graph during construction
@@ -208,16 +208,29 @@ class PlanShapeSpec extends SparkSpec {
       s"want Exchange(hash) over partial agg over posexplode:\n${p.take(2000)}")
   }
 
-  test("exact 1-NN block count scales with session parallelism") {
-    val parts = spark.sessionState.conf.numShufflePartitions
+  test("exact 1-NN tile stage spreads over the session's slots") {
+    // the tiles' input is small, so a by-bytes shuffle would coalesce
+    // them into one task; the kernel stage must take its width from
+    // the tiles and the slots instead
+    val slots = spark.sparkContext.defaultParallelism
+    val b = math.max(8, spark.sessionState.conf.numShufflePartitions * 2)
     val e = sources.Tables.load(spark, sf(), "embeddings").select("vec_id", "embedding")
-    val df = dedup.Dedup.exactSelf1nn(spark, e)
-    val blkCount = e.select(
-      pmod(xxhash64(col("vec_id")), lit(math.max(8, parts * 2))).as("blk"))
-      .distinct().count()
-    assert(blkCount > parts.toLong,
-      s"block-grid must expose more join keys ($blkCount) than slots ($parts)")
-    assert(df.count() === e.count(), "every vector still gets its 1-NN")
+    val tileTasks = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        // the kernel's stage is the one that decodes the tile rows
+        if (s.stageInfo.rddInfos.exists(_.scope.exists(_.name == "DeserializeToObject")))
+          tileTasks.put(s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(dedup.Dedup.exactSelf1nn(spark, e).collect().length === e.count(),
+        "every vector still gets its 1-NN")
+      val tasks = tileTasks.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(tasks != null, "no tile stage seen")
+      assert(tasks >= math.min(b * b, slots),
+        s"tile stage ran on $tasks tasks; want min(${b * b} tiles, $slots slots)")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("repetition signals: bigram stats never shuffle, word stats key by doc") {
